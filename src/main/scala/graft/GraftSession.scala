@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
+
 /** Session factory for the graft engine.
   *
   * Tuned for the container's `local[32]` single-JVM mode, but every setting
@@ -9,9 +11,21 @@ import org.apache.spark.sql.SparkSession
   * AQE on (runtime re-planning, skew-join splitting, partition coalescing),
   * shuffle partitions sized to the parallelism actually available instead of
   * the 200 default, UTC session time zone so window/bucket arithmetic is
-  * reproducible against external oracles.
+  * reproducible against external oracles, and [[localFileSystem]] for the
+  * `file:` scheme.
   */
 object GraftSession {
+
+  /** Serve the `file:` scheme, for both the FileSystem and the FileContext
+    * API, from the fork-free local file system (`graft.sources.LocalFs`).
+    * Checkpoint, state-store and sink writes on local disk then run no
+    * `chmod`/`readlink` process. Bytes, `.crc` sidecars and FileContext's
+    * atomic rename are unchanged; every other scheme (`hdfs:`, `s3a:`, ...)
+    * keeps its own implementation.
+    */
+  val localFileSystem: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
   def local(
       cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
@@ -49,7 +63,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.statefulOperator.stateRebalancing.enabled", "true")
+      .config(localFileSystem)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -22,6 +22,7 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystem)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
