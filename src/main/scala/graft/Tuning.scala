@@ -1,34 +1,18 @@
 package graft
 
-/** Runtime switches for optimization-round A/B attribution.
-  *
-  * Every switch defaults to the SHIPPED behavior; the `graft.tools.AB`
-  * runner flips them per leg (system properties, read at call time) so an
-  * old-vs-new comparison can interleave legs inside ONE JVM and one host
-  * window — the only protocol that survived this round's window drift
-  * (single-tool before/after runs 10 minutes apart disagreed by 30% on
-  * untouched queries).
+/** Engine configuration read from system properties (and, for the scan
+  * fill, the environment) at call time, so a test or a launcher can set
+  * it per run without rebuilding the session.
   */
 object Tuning {
 
   private def prop(name: String): Option[String] =
     Option(System.getProperty(name))
 
-  /** Partition-aligned index/state writes (guide §6): repartition by the
-    * partition columns immediately before a partitionBy write so each
-    * partition dir gets one file instead of tasks x dirs. Default OFF:
-    * the interleaved A/B measured it 1.13-1.16x on the lifecycle rows at
-    * bench scale (the added exchange costs more than the file-count
-    * saving while AQE already coalesces the upstream to a few tasks);
-    * it exists for the scan-filled build paths, where the upstream is
-    * deliberately many-task and the file explosion is real.
-    */
-  def alignWrites: Boolean =
-    prop("graft.alignWrites").contains("1")
-
   /** Scan-parallelism fill target for compute-dense tables (guide §2.5
-    * unsplittable-input rule); None disables. Default: the session's
-    * defaultParallelism (resolved at the call site).
+    * unsplittable-input rule); None disables. `graft.scanFill` (or
+    * `SPARK_GRAFT_SCAN_FILL`): `off`, or a task count. Default: the
+    * session's defaultParallelism (resolved at the call site).
     */
   def scanFill(defaultParallelism: Int): Option[Int] =
     prop("graft.scanFill").orElse(sys.env.get("SPARK_GRAFT_SCAN_FILL")) match {
@@ -37,160 +21,17 @@ object Tuning {
       case None => Some(defaultParallelism)
     }
 
-  /** T1 arm of [[graft.functions.Graph.triangleCountDelta]] for the two
-    * corpus-fraction-delta gate rows: adjacency-intersect (default) vs
-    * the wedge join. Exists so the A/B runner can flip arms in one
-    * window; both arms are bit-identical (GraphOpsSpec).
-    */
-  def triDeltaAdjacency: Boolean =
-    prop("graft.triAdj").forall(_ == "1")
-
-  /** Size gate (bytes) for the adjacency arm's full-graph broadcast
-    * (r17 verdict #1: the arm hinted `broadcast(symAdj)` with NOTHING
-    * enforcing the scaladoc's "must fit a broadcast" caveat — a local
-    * assumption shipped as the default). The gate is two-level
-    * (see [[graft.functions.Graph.triangleCountDelta]]): a plan-stats
-    * pre-gate at 64x this bound skips even BUILDING the adjacency when
-    * the edge table is obviously corpus-sized, and the precise gate
-    * reads the checkpointed adjacency's ACTUAL storage bytes. Past
-    * either, T1 falls back to the wedge join (bit-identical,
-    * GraphOpsSpec-pinned). Default 256 MB — the guide §3.1 "a few
-    * hundred MB is usually fine; multiple GB is asking for OOMs" rule,
-    * and the arm broadcasts two projections of the table.
+  /** Size gate (bytes) for the adjacency arm's full-graph broadcast in
+    * [[graft.functions.Graph.triangleCountDelta]], `graft.triAdjMaxBytes`.
+    * The gate is two-level: a plan-stats pre-gate at 64x this bound
+    * skips even BUILDING the adjacency when the edge table is obviously
+    * corpus-sized, and the precise gate reads the checkpointed
+    * adjacency's ACTUAL storage bytes. Past either, T1 falls back to the
+    * wedge join (bit-identical, GraphOpsSpec-pinned). Default 256 MB —
+    * the guide §3.1 "a few hundred MB is usually fine; multiple GB is
+    * asking for OOMs" rule, and the arm broadcasts two projections of
+    * the table.
     */
   def triAdjMaxBytes: Long =
     prop("graft.triAdjMaxBytes").map(_.toLong).getOrElse(256L << 20)
-
-  /** §2.6 job overlap inside [[graft.functions.Graph.maintainTriangleCounts]]
-    * (r18): the edge-log / resolved-set write runs on a pool thread
-    * under the batch's dominant job (the triangle-delta fold), with the
-    * counts merge — whose marker commits the batch — strictly after the
-    * write joins, so the crash-ordering contract is unchanged. Default
-    * ON; the switch exists for the A/B runner.
-    */
-  def triOverlap: Boolean =
-    prop("graft.triOverlap").forall(_ == "1")
-
-  /** Single-extraction gate form of
-    * [[graft.functions.Curation.ccnetCutsStaleness]] (r18, guide §1.2):
-    * one corpus trigram pass feeds both slices instead of the r17
-    * freeze-then-report composition's two sequential extraction chains.
-    * Bit-identical row (oracle-pinned). Default ON; the switch keeps the
-    * two-chain form callable for the A/B runner.
-    */
-  def ccnetOneExtract: Boolean =
-    prop("graft.ccnetOneExtract").forall(_ == "1")
-
-  /** Single-cube priors/counts in
-    * [[graft.functions.TextAnalysis.nbModelStalenessReport]] (r18, guide
-    * §1.2): one (frozen, train, label) count cube feeds the slice counts
-    * and both priors, replacing three doc-level scans that each re-read
-    * the corpus text and re-hashed the train split. Exact partial
-    * re-sums — bit-identical row. Default ON; the switch keeps the
-    * three-scan form callable for the A/B runner.
-    */
-  def nbPriorCube: Boolean =
-    prop("graft.nbPriorCube").forall(_ == "1")
-
-  /** connectedComponents' pre-partitioned symmetric edge checkpoint
-    * (r18, guide §2.4): materialize the symmetric frame once,
-    * hash-partitioned on the propagate join key with a DATA-SIZED
-    * partition count, so label-propagation rounds never re-shuffle the
-    * edge side. Default ON; the A/B runner flips it per leg.
-    */
-  def ccPrepartition: Boolean =
-    prop("graft.ccPrepart").forall(_ == "1")
-
-  /** Spread the PPJoin verify tail of
-    * [[graft.functions.Dedup.jaccardPrefixPairs]] (r18, guide §2.5):
-    * the candidate-pair frame is BYTE-small but each verify row costs
-    * an `array_intersect` over full shingle sets, so AQE's byte-based
-    * coalescing (parallelismFirst still floors at minPartitionSize =
-    * 1 MB) collapses the two verify join stages to ONE task each —
-    * StageProf measured 1.93 s + 1.69 s single-task of
-    * dedup_jaccard_complete's 6.3 s. The fix pins the partition count
-    * of the SAME two exchanges the joins already pay (repartition on
-    * the join key with an explicit count AQE cannot coalesce) at
-    * `defaultParallelism` — the compute-slot measure, which adapts to
-    * any cluster; no exchange is added. Default ON; the switch keeps
-    * the coalesced form callable for the A/B runner.
-    */
-  def pairVerifySpread: Boolean =
-    prop("graft.pairVerifySpread").forall(_ == "1")
-
-  /** One-tokenize inverted-index builds (r18, guide §1.2): the base
-    * write and the appender carry the doc length through the postings
-    * groupBy as a per-doc grouping constant (no lens join, no second
-    * tokenize of the corpus for it) and derive the stats row from the
-    * WRITTEN postings — tot = sum(tf), an index-sized single-column
-    * read-back, since every token contributes exactly 1 to its (doc, t)
-    * posting — plus a column-pruned count of the input for n
-    * (token-less docs hold no postings but count toward n). The old
-    * form tokenized the corpus THREE times per build (postings explode,
-    * lens join side, stats agg). Stats still land LAST (the commit
-    * marker). Default ON; the switch keeps the lens-join form callable
-    * for the A/B runner.
-    */
-  def idxOnePass: Boolean =
-    prop("graft.idxOnePass").forall(_ == "1")
-
-  /** One-shingling LSH index builds (r18, guide §1.2): write the
-    * shingle table FIRST and build the band keys from the WRITTEN
-    * hashed-shingle longs (`bandKeysFromShingles` over a read-back)
-    * instead of running the hashed-shingle expression — the most
-    * expensive narrow transform in the dedup family — twice per build
-    * (once inside bandKeys, once for the shingle table). Bit-identical
-    * rows (same sh -> same minhash -> same bands). The shingles-first
-    * order is also the SAFER crash order: shingle rows without band
-    * rows are unreachable (candidate generation starts from bands),
-    * mirroring deleteFromLshIndex's bands-first rationale. Default ON;
-    * the switch keeps the two-scan form callable for the A/B runner.
-    */
-  def lshOnePass: Boolean =
-    prop("graft.lshOnePass").forall(_ == "1")
-
-  /** Surgical build-input scan fill for the index BUILD paths (r18,
-    * guide §2.5 unsplittable input): when a build's input frame cannot
-    * plausibly scan with more than one task (estimated plan bytes
-    * within ONE split), hash-repartition it on the unique id so the
-    * crypto-dense encode (minhash banding, shingling, tokenize)
-    * parallelizes. Returns None (leave the frame alone) past the
-    * condition — at corpus scale the estimate exceeds a split and this
-    * is the identity. CALLER CONTRACT: a partitioned write downstream
-    * of a filled input MUST re-align to its partition tree
-    * (repartition(partCols)) or the multi-task upstream multiplies the
-    * file count tasks x dirs — the exact 2.47x the r17 GLOBAL fill
-    * measured on these rows; the surgical form exists because the
-    * global fill + global align pair was still negative while the
-    * single-task encode stages are real (StageProf: 1.77 s of 12.6 in
-    * ONE task on dedup_retract_labels' band build).
-    *
-    * DEFAULT OFF — measured NEGATIVE at bench scale (r18 interleaved
-    * A/B, fill+align surgical: dedup_retract_labels 1.08x,
-    * index_delete_bm25 1.09x WORSE): the unfilled single-task writer
-    * already lands exactly one file per bucket dir, so the fill buys
-    * only the parallel encode and pays an exchange plus a 64-task
-    * aligned write — same verdict as r17's global fill/align pair,
-    * now pinned for the surgical form too. Kept behind the switch as
-    * the documented negative.
-    */
-  def buildFill(df: org.apache.spark.sql.DataFrame,
-      idCol: String): Option[org.apache.spark.sql.DataFrame] = {
-    if (!prop("graft.buildFill").contains("1")) return None
-    val spark = df.sparkSession
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(maxSplit)) None
-    else Some(df.repartition(spark.sparkContext.defaultParallelism,
-      org.apache.spark.sql.functions.col(idCol)))
-  }
-
-  /** [[alignWrites]] applied: repartition `df` by `cols` when the switch
-    * is on, identity when off.
-    */
-  def align(df: org.apache.spark.sql.DataFrame,
-      cols: Seq[String]): org.apache.spark.sql.DataFrame =
-    if (alignWrites)
-      df.repartition(cols.map(org.apache.spark.sql.functions.col): _*)
-    else df
 }

@@ -1424,13 +1424,12 @@ object Graph {
         // no-op pass the overlap pays for the ordering). oldOpt's file
         // listing snapshotted at frame creation, so the concurrent
         // batch=<id> write is invisible to the fold's scans.
-        def writeLog(): Unit = IndexLayout.overwriteBatchPartitions(
-          delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
         val writeF =
           if (delta.isEmpty) None
-          else if (!graft.Tuning.triOverlap) { writeLog(); None }
-          else Some(scala.concurrent.Future { writeLog() }(
-            scala.concurrent.ExecutionContext.global))
+          else Some(scala.concurrent.Future {
+            IndexLayout.overwriteBatchPartitions(
+              delta.withColumn("batch", lit(batchId)), edgesDir, Seq("batch"))
+          }(scala.concurrent.ExecutionContext.global))
         val dAgg =
           try d.groupBy(col("node"))
             .agg(sum(col("tri_delta")).as("tri_cnt"))
@@ -1462,13 +1461,11 @@ object Graph {
           // same §2.6 overlap as the insert path: the resolved-set write
           // (crash-replay evidence, must land before the merge's marker)
           // runs on a pool thread under the delta fold
-          def writeResolved(): Unit =
-            resolved.write.mode("overwrite").parquet(delDir)
           val writeF =
             if (resolved.isEmpty) None
-            else if (!graft.Tuning.triOverlap) { writeResolved(); None }
-            else Some(scala.concurrent.Future { writeResolved() }(
-              scala.concurrent.ExecutionContext.global))
+            else Some(scala.concurrent.Future {
+              resolved.write.mode("overwrite").parquet(delDir)
+            }(scala.concurrent.ExecutionContext.global))
           val d = triangleCountDelta(
             oldOpt.getOrElse(resolved), resolved, pinDelta = false)
           val dAgg =

@@ -536,10 +536,10 @@ class FunctionsSpec extends SparkSpec {
     assert(ex.getMessage.contains("buckets"))
   }
 
-  test("idxOnePass / lshOnePass: the one-pass index builds (r18) land " +
-      "bit-identical tables to the lens-join / two-scan forms — " +
-      "postings+stats and bands+shingles, base build AND append, " +
-      "including token-less docs (count toward n, hold no postings)") {
+  test("one-pass index builds match postings/stats/bands computed apart") {
+    // base build AND append, pinned against expectations derived outside
+    // the build: postings/stats from a Scala-side tokenizer, bands and
+    // shingles from the un-indexed Dedup expressions
     val all = (0L until 120L).map { i =>
       val rare = if (i % 20 == 0) " zeta" else ""
       // every 37th doc tokenizes to NOTHING — the n-vs-postings edge
@@ -549,43 +549,72 @@ class FunctionsSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val base = all.filter(col("doc_id") < 80)
     val b1 = all.filter(col("doc_id") >= 80)
-    def rows(path: String, cols: Seq[String]): Seq[String] =
-      spark.read.parquet(path).select(cols.map(col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    def flipped[A](key: String, flag: String)(body: => A): A = {
-      System.setProperty(key, flag)
-      try body finally System.clearProperty(key)
+    val batches = Seq(IndexLayout.BaseBatch -> base, 0L -> b1)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    def read(path: String, cols: Seq[String]): Seq[String] =
+      rows(spark.read.parquet(path), cols)
+
+    val inv = java.nio.file.Files.createTempDirectory("graft-op-inv").toString
+    TextAnalysis.writeInvertedIndex(base, "text", "doc_id", inv, buckets = 8)
+    TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", inv,
+      buckets = 8, batchId = Some(0L))
+    def bucket(t: String): Long = java.lang.Math.floorMod(
+      java.lang.Long.parseLong(
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(t.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString,
+        16), 8L)
+    val toks = batches.map { case (batch, df) =>
+      batch -> df.as[(Long, String)].collect().toSeq.map { case (id, text) =>
+        id -> text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+      }
     }
-    def buildInv(flag: String): (Seq[String], Seq[String]) =
-      flipped("graft.idxOnePass", flag) {
-        val idx = java.nio.file.Files
-          .createTempDirectory(s"graft-op-inv$flag").toString
-        TextAnalysis.writeInvertedIndex(base, "text", "doc_id", idx, buckets = 8)
-        TextAnalysis.appendToInvertedIndex(b1, "text", "doc_id", idx,
-          buckets = 8, batchId = Some(0L))
-        (rows(s"$idx/postings",
-          Seq("doc_id", "t", "tf", "len", "bucket", "batch")),
-          rows(s"$idx/stats", Seq("n", "tot", "buckets", "batch")))
+    val expPostings = toks.flatMap { case (batch, tokd) =>
+      tokd.flatMap { case (id, ts) =>
+        ts.groupBy(identity).toSeq.map { case (t, occ) =>
+          org.apache.spark.sql.Row(id, t, occ.size.toLong, ts.size.toLong,
+            bucket(t), batch).toString
+        }
       }
-    val (p1, s1) = buildInv("1")
-    val (p0, s0) = buildInv("0")
-    assert(p1 === p0, "one-pass postings diverged from the lens-join form")
-    assert(s1 === s0, "one-pass stats diverged from the lens-join form")
-    def buildLsh(flag: String): (Seq[String], Seq[String]) =
-      flipped("graft.lshOnePass", flag) {
-        val idx = java.nio.file.Files
-          .createTempDirectory(s"graft-op-lsh$flag").toString
-        Dedup.writeLshIndex(base, "text", "doc_id", idx,
-          n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
-        Dedup.appendToLshIndex(b1, "text", "doc_id", idx,
-          n = 3, bands = 4, rowsPerBand = 4, buckets = 8, batchId = Some(0L))
-        (rows(s"$idx/bands", Seq("doc", "band", "bh", "bucket", "batch")),
-          rows(s"$idx/shingles", Seq("doc", "sh", "batch")))
+    }.sorted
+    assert(read(s"$inv/postings",
+        Seq("doc_id", "t", "tf", "len", "bucket", "batch")) === expPostings,
+      "postings diverged from the Scala-side tokenization")
+    val expStats = toks.map { case (batch, tokd) =>
+      org.apache.spark.sql.Row(tokd.size.toLong, tokd.map(_._2.size.toLong).sum,
+        8L, batch).toString
+    }.sorted
+    assert(toks.forall(_._2.exists(_._2.isEmpty)),
+      "fixture lost its token-less docs")
+    assert(read(s"$inv/stats", Seq("n", "tot", "buckets", "batch")) === expStats,
+      "stats diverged: n must count token-less docs, tot every token")
+
+    val lsh = java.nio.file.Files.createTempDirectory("graft-op-lsh").toString
+    Dedup.writeLshIndex(base, "text", "doc_id", lsh,
+      n = 3, bands = 4, rowsPerBand = 4, buckets = 8)
+    Dedup.appendToLshIndex(b1, "text", "doc_id", lsh,
+      n = 3, bands = 4, rowsPerBand = 4, buckets = 8, batchId = Some(0L))
+    val expBands = batches.map { case (batch, df) =>
+      Dedup.bandKeys(df, "text", "doc_id", n = 3, bands = 4, rowsPerBand = 4)
+        .select(col("doc"), col("band"), col("bh"), lit(batch).as("batch"))
+    }.reduce(_ unionByName _)
+    assert(read(s"$lsh/bands", Seq("doc", "band", "bh", "batch")) ===
+      rows(expBands, Seq("doc", "band", "bh", "batch")),
+      "bands diverged from Dedup.bandKeys over the input")
+    spark.read.parquet(s"$lsh/bands")
+      .select(col("bh"), col("bucket").cast("long"))
+      .as[(String, Long)].collect().foreach { case (bh, b) =>
+        assert(b === java.lang.Long.parseLong(bh.take(12), 16) % 8L,
+          s"band $bh filed under bucket $b")
       }
-    val (bb1, sh1) = buildLsh("1")
-    val (bb0, sh0) = buildLsh("0")
-    assert(bb1 === bb0, "one-pass bands diverged from the two-scan form")
-    assert(sh1 === sh0, "one-pass shingles diverged from the two-scan form")
+    val expShingles = batches.map { case (batch, df) =>
+      Dedup.withHashedShingles(df, "text", 3, "sh")
+        .filter(size(col("sh")) > 0)
+        .select(col("doc_id").as("doc"), col("sh"), lit(batch).as("batch"))
+    }.reduce(_ unionByName _)
+    assert(read(s"$lsh/shingles", Seq("doc", "sh", "batch")) ===
+      rows(expShingles, Seq("doc", "sh", "batch")),
+      "shingles diverged from Dedup.withHashedShingles over the input")
   }
 
   test("appendToInvertedIndex crash window: orphan postings (no stats " +
